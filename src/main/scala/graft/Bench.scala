@@ -391,9 +391,9 @@ object Bench {
     * syscall-heaviest CLEAN -Xmx8g sample in the suite is the sf1 plain
     * reuse twin at 6.5–11.3 sys cores across three idle control runs —
     * and the per-stage profile shows that burn is INHERENT, not noise
-    * (TwinProfile at 8g: the plain screen's six history anti-joins +
-    * per-batch landings run at ~10.6 sys cores sustained). Ordinary
-    * heavy samples run 0.2–3.1. The injected -Xmx100g pathology's
+    * (docs/twinprofile_plain_8g.json: the plain screen's six history
+    * anti-joins + per-batch landings run at ~10.6 sys cores sustained).
+    * Ordinary heavy samples run 0.2–3.1. The injected -Xmx100g pathology's
     * bench-channel samples measured 16.2–20.1 sys cores (bloom twin
     * 4.6×, plain 2.6×, sf100 MinHash 2.4–8× slow). 13.0 splits the
     * bands: ≥15% above the worst clean value, ≥24% under the mildest
@@ -408,10 +408,10 @@ object Bench {
     * rides in every artifact as a diagnostic array only. (2) sys
     * FRACTION (stime/(utime+stime)) does not discriminate either —
     * clean plain screen 0.49 vs pathological 0.64, clean bloom 0.27 vs
-    * 0.33 (TwinProfile) — overlapping bands, because a standalone
-    * oversized-heap run touches progressively and barely suffers; the
-    * bench-context amplifier is G1 UNCOMMITTING heap after the
-    * calibration System.gc() and the next sample re-zeroing the pages,
+    * 0.33 (docs/twinprofile_*.json) — overlapping bands, because a
+    * standalone oversized-heap run touches progressively and barely
+    * suffers; the bench-context amplifier is G1 UNCOMMITTING heap after
+    * the calibration System.gc() and the next sample re-zeroing the pages,
     * which no per-stage fraction sees. The threshold-free arm that
     * actually pins the channel difference is [[heapMismatchCause]].
     */
@@ -1202,43 +1202,6 @@ object Bench {
       val t = new Thread(r, "bench-watchdog"); t.setDaemon(true); t
     })
 
-  private def newSession(cpus: String): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // shuffle partitions default to the thread count but are
-      // separately overridable (round 17): the REAL sf100 OOM class —
-      // named by the in-process histogram, docs/HOST_DRIFT.md §6 — is
-      // execution-side join-build/sort memory ([J pages of
-      // LongToUnsafeRowMap + sorter arrays), and its peak scales with
-      // build-side-bytes ÷ shuffle-partitions × concurrent-tasks. At
-      // sf100 working sets, 32 partitions make per-task builds
-      // gigabyte-class; 128 quarters them. AQE coalesces small
-      // shuffles back down, so the knob is near-free where data is
-      // small and load-bearing where it is not — the standard
-      // partitions-track-data sizing this library preaches for 100 TB.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // unroll de-pressure knobs (round 16, verdict item 3): the r15
-      // driver crash was storage-memory exhaustion from 32 concurrent
-      // task unrolls of localCheckpoint blocks at the 8 g heap.
-      // CHECKPOINT_LEVEL=DISK_ONLY streams checkpoint blocks straight
-      // to DiskStore (no unroll at all — see Materialize.cut);
-      // STORAGE_FRACTION trades execution headroom for storage. Both
-      // default to Spark/library defaults; the measured decision is in
-      // docs/BENCH_SALVAGE.md + SCALING.md.
-      .config(graft.ops.Materialize.CheckpointLevelKey,
-        sys.env.getOrElse("SPARK_GRAFT_CHECKPOINT_LEVEL", "MEMORY_AND_DISK"))
-    val spark = sys.env.get("SPARK_GRAFT_STORAGE_FRACTION")
-      .fold(b)(f => b.config("spark.memory.storageFraction", f))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Untimed warmup: touch every table once, then run a REPRESENTATIVE
     * slice of the heaviest composed query end-to-end. Table counts alone
     * (rounds 2–6) left the JVM-global machinery cold — Janino compilation
@@ -1411,7 +1374,7 @@ object Bench {
   private def scaleSection(label: String, dir: String, cpus: String,
                            picked: Seq[Q], timeLeft: () => Boolean,
                            publish: (String, ScaleSummary) => Unit): Unit = {
-    val spark = newSession(cpus)
+    val spark = Session()
     try {
       // Pre-validate the generated dir: every table readable and
       // non-empty. Round 4's failed ScaleGen left documents.parquet as an
@@ -1931,7 +1894,7 @@ object Bench {
     val budget = sys.env.getOrElse(SectionBudgetEnv, "1200").toDouble
     val names = sys.env.getOrElse(SectionQueriesEnv, "")
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus().toString
     val start = System.nanoTime()
     def timeLeft(): Boolean = (System.nanoTime() - start) / 1e9 < budget
     inFlightFile = Some(outPath + ".inflight")
@@ -2174,7 +2137,7 @@ object Bench {
     def elapsed: Double = (System.nanoTime() - startNs) / 1e9
     def timeLeft(): Boolean = elapsed < deadlineSecs
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus().toString
     // 5 passes, not 3: after one suspect exclusion a 3-pass query is
     // down to two samples — one GC-unlucky sample then decides the
     // median (see [[median]]). Five passes keep ≥3 clean samples through
@@ -2420,7 +2383,7 @@ object Bench {
       if (!timeLeft()) {
         if (!skippedWork.contains(s"pass$p")) { truncated = true; skippedWork += s"pass$p" }
       } else {
-        val spark = newSession(cpus)
+        val spark = Session()
         try {
           warmup(spark, sfDir)
           val passLoad = loadAvg

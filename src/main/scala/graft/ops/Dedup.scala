@@ -794,7 +794,7 @@ object Dedup {
     * long-document corpora (web pages: hundreds-to-thousands of shingles
     * vs 64 bands) this is 10-80× smaller; on the short-doc synthetic
     * gate corpus (~51 shingles/doc) it is actually slightly LARGER
-    * (measured by IncrementalProbeBench at sf100: 132 MB vs 104 MB).
+    * (measured at sf100, docs/probe_sweep_r13.txt: 132 MB vs 104 MB).
     * The bucket derivation is byte-identical to [[minhashLshPairs]]'
     * banding (same signature expression, same per-band xxhash64 fold),
     * so an index built here collides exactly like the in-memory path.
@@ -883,7 +883,7 @@ object Dedup {
     * the shuffle-free arrival of both tables (and its negative control
     * shows the plain-parquet index reshuffling per batch).
     *
-    * WHEN TO USE — measured, not assumed (IncrementalProbeBench with
+    * WHEN TO USE — measured, not assumed (docs/probe_sweep_r13.txt, with
     * pre-persisted indexes, warm pass, 8 g heap; round-13 sweep across
     * the generated decades, history = half the corpus):
     *
@@ -941,7 +941,7 @@ object Dedup {
       n, bands, rowsPerBand, threshold).forkMaterialize()
     // ONE tokenize+shingle pass over the survivors feeds both the band
     // probe and the verify sets (the signature is the dominant batch
-    // cost — see the IncrementalProbeBench numbers in the scaladoc)
+    // cost — see the docs/probe_sweep_r13.txt numbers in the scaladoc)
     val survShingled = wordShingled(batchSurvivors, textCol, idCol, n)
       .forkMaterialize()
     // candidate probe: batch side built (Θ(batch × bands) fixed-width

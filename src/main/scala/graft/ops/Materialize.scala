@@ -54,9 +54,14 @@ import org.apache.spark.sql.DataFrame
   * their frames are iteration-internal (single consumer, replaced next
   * round), the cut exists to stop exponential plan growth rather than to
   * share work, and a per-iteration filesystem round-trip would multiply
-  * the loop's critical path by its round count. On a real cluster an
-  * executor loss there costs one recompute of a bounded per-round frame,
-  * not the whole pipeline.
+  * the loop's critical path by its round count. The price is
+  * resilience: a cut is a `localCheckpoint`, whose truncated lineage
+  * cannot recompute lost blocks, so an executor loss after a cut fails
+  * the next action that reads the cut frame with
+  * `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND` (measured on
+  * `local-cluster[2,1,1024]`) — it does not recompute the round. A
+  * `DISK_ONLY` [[CheckpointLevelKey]] does not help: the blocks still
+  * belong to the dead executor. There is no durable cut mode yet.
   */
 object Materialize {
 

@@ -73,10 +73,9 @@ private[graft] object CurationCurateQueries {
     * screens TAIL — the perplexity screen fits an LM on the deduped
     * survivors and scores every doc, and DSIR runs two hashed-unigram
     * passes plus a top-k cut: 14.4 s, ~58% of the gate wall
-    * (docs/CURATE_SCREENS_ATTRIBUTION.md; per-stage table from
-    * `CurateProfile <reps> screens`). Like curateE2E it is excluded
-    * from every scale set — the composition coverage needs the planted
-    * structure; scaling claims don't.
+    * (per-stage table in docs/CURATE_SCREENS_ATTRIBUTION.md). Like
+    * curateE2E it is excluded from every scale set — the composition
+    * coverage needs the planted structure; scaling claims don't.
     */
   val curateE2EScreens = Q("q_curate_e2e_screens",
     (s, dir) => {

@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   *
   * Spark 4 moved `Column` to the API-agnostic sql-api module; the classic
   * Expression-backed constructor is `private[sql]`. This shim lives in
-  * `org.apache.spark.sql` purely to re-expose that bridge to the graft
-  * library (same approach any Spark extension library uses).
+  * `org.apache.spark.sql` purely to re-expose that bridge (and the
+  * listener-bus drain) to the graft library (same approach any Spark
+  * extension library uses).
   */
 object GraftShim {
   def column(e: Expression): Column =
@@ -21,4 +22,10 @@ object GraftShim {
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  /** Block until every posted listener event has been delivered (the
+    * listener bus is private[spark]) — graft.Profile reads its job table
+    * only after the measured rep's job-end events have all arrived.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

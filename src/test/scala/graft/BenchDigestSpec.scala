@@ -268,7 +268,7 @@ class BenchDigestSpec extends AnyFunSuite {
     // below-threshold values stay clean — including the syscall-heaviest
     // clean sample's measured 6.5-11.3 sys cores (sf1 plain reuse twin,
     // whose six history anti-joins + landings burn ~10.6 sys cores
-    // LEGITIMATELY per the committed TwinProfile stage data)
+    // LEGITIMATELY per the committed docs/twinprofile_*.json stage data)
     assert(Bench.envCause(d(gc = 0.4, sysC = 11.3, minf = 40000.0,
       mf = 40.0, io = 0.2, mem = 0.2)).isEmpty)
   }

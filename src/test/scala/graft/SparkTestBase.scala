@@ -13,13 +13,10 @@ object SparkTestBase {
     // previous `sbt test` run — the catalog is fresh each run but
     // ./spark-warehouse would persist, failing with LOCATION_ALREADY_EXISTS.
     val warehouse = java.nio.file.Files.createTempDirectory("graft-warehouse").toString
-    val s = SparkSession.builder()
-      .master("local[4]")
+    // env = Map.empty: the caller's SPARK_GRAFT_* variables (a fork
+    // strategy, a checkpoint level) must not leak into the suites
+    val s = Session.builder(env = Map.empty)
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", warehouse)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

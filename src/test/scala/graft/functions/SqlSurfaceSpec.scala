@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -38,6 +40,46 @@ class SqlSurfaceSpec extends SparkTestBase {
       "SELECT locscaleb(v, 3.0, true) AS b FROM VALUES (1.0),(2.0),(3.0),(4.0),(5.0) AS x(v)")
       .select("b.median").collect().head.getDouble(0)
     assert(math.abs(agg - math.log1p(3.0)) < 1e-12)
+  }
+
+  test("codegen-strict: cosine_sim and minhash_sig return null over non-nullable inputs") {
+    // Regression for the silent interpreted fallback: a kernel that can
+    // return null but inherits nullable=false from coalesce-built inputs
+    // generates a class Janino rejects (CosineSim: with fallback off the
+    // query fails instead of quietly leaving whole-stage codegen) or
+    // writes an unchecked null (MinHashSig, a CodegenFallback).
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      // spark.range, not a local Seq: a Project over a LocalRelation is
+      // folded on the driver by interpreted eval and never reaches codegen.
+      // One kernel per projection: a CodegenFallback expression evicts
+      // its Project from whole-stage codegen.
+      val id = col("id")
+      def run(kernel: Column): (DataFrame, Array[Row]) = {
+        val df = spark.range(0, 4, 1, 1).select(id, kernel.as("v"))
+        (df, df.collect().sortBy(_.getLong(0)))
+      }
+      // id 0: a real pair; 1: zero norm; 2, 3: mismatched lengths
+      val (cosDf, cos) = run(VectorExprs.cosineSim(
+        coalesce(when(id === 0, array(lit(1.0), lit(2.0)))
+          .when(id === 1, array(lit(0.0), lit(0.0))), array(lit(1.0))),
+        array(id.cast("double") + 1.0, lit(1.0))))
+      assert(cosDf.queryExecution.executedPlan.exists {
+        case w: WholeStageCodegenExec => w.child.exists(_.isInstanceOf[ProjectExec])
+        case _ => false
+      }, cosDf.queryExecution.executedPlan)
+      assert(math.abs(cos(0).getDouble(1) - 3.0 / math.sqrt(10.0)) < 1e-12)
+      assert((1 to 3).forall(i => cos(i).isNullAt(1)))
+      // even ids: one shingle; odd ids: an empty array has no minima
+      val (sigDf, sig) = run(Dedup.minhashSignature(
+        coalesce(when(id % 2 === 0, array(concat(lit("s"), id.cast("string")))),
+          typedLit(Seq.empty[String])), 8))
+      assert(sig(0).getSeq[Long](1).size == 8 && sig(2).getSeq[Long](1).size == 8)
+      assert(sig(1).isNullAt(1) && sig(3).isNullAt(1))
+      assert(cosDf.schema("v").nullable && sigDf.schema("v").nullable)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("nfc_normalize: composes decomposed forms, identity fast path, SQL parity") {

@@ -17,8 +17,8 @@ run() {
   echo "== arm: $1  loadavg: $(cut -d' ' -f1 /proc/loadavg)  cached_kb: $(grep ^Cached: /proc/meminfo | awk '{print $2}')" >> "$OUT"
   java -Xms8g -Xmx8g $OPENS -Dspark.ui.enabled=false \
     -Dspark.sql.session.timeZone=UTC -cp "$CP" \
-    graft.Explain /tmp/graft-sf100 q_curate_e2e_scale 2>/dev/null \
-    | grep "took" >> "$OUT"
+    graft.Profile /tmp/graft-sf100 q_curate_e2e_scale 2>/dev/null \
+    | grep "wall" >> "$OUT"
 }
 for i in 1 2; do
   sync; echo 3 > /proc/sys/vm/drop_caches
