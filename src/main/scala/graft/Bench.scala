@@ -92,6 +92,14 @@ import graft.queries.Q
   *
   * SPARK_GRAFT_BENCH_ONLY=q_a,q_b narrows the catalog (dev loop: measure
   * one query without paying for the suite).
+  *
+  * What the bench does NOT do: explain drift between runs on different
+  * boots. Its arms flag only a sample whose OWN window ran abnormal
+  * (external CPU, own kernel CPU, GC, a hot calibration bracket, a heap
+  * mismatch). Scale samples from different boots of one host class
+  * differed by 1.5–1.9× with every arm quiet (docs/HOST_DRIFT.md §2),
+  * so a speed claim comes from a same-boot A/B of the old and the new
+  * code — `perfbench/run.py` on both commits.
   */
 object Bench {
 
@@ -172,76 +180,6 @@ object Bench {
     u + s
   }
 
-  /** minflt (minor page faults of this process) from a `/proc/self/stat`
-    * line — 1-based field 10, index 7 after the last `)` (same
-    * comm-with-spaces hazard as [[parseSelfUtimeStime]]). Minor faults
-    * are pages resolved WITHOUT disk IO — fresh-anonymous-page zeroing
-    * above all — which is why the majflt arm (field 12) never saw the
-    * heap pathology: an oversized heap faults in millions of fresh pages
-    * and not one of them is "major". Package-private for the spec.
-    */
-  private[graft] def parseSelfMinflt(statLine: String): Long = {
-    val after = statLine.substring(statLine.lastIndexOf(')') + 1).trim
-    val f = after.split("\\s+")
-    require(f.length >= 13, s"unexpected /proc/self/stat tail: $after")
-    f(7).toLong
-  }
-
-  /** majflt (major page faults of this process) from a `/proc/self/stat`
-    * line — 1-based field 12, index 9 after the last `)` (same comm-with-
-    * spaces hazard as [[parseSelfJiffies]]). Package-private for the spec.
-    */
-  private[graft] def parseSelfMajflt(statLine: String): Long = {
-    val after = statLine.substring(statLine.lastIndexOf(')') + 1).trim
-    val f = after.split("\\s+")
-    require(f.length >= 13, s"unexpected /proc/self/stat tail: $after")
-    f(9).toLong
-  }
-
-  /** (read_bytes, write_bytes) from `/proc/self/io` content — ACTUAL
-    * device IO attributed to this process (the storage-layer counters,
-    * not rchar/wchar syscall volume, which double-counts page-cache
-    * hits). Bracketing a sample yields its own-process device-IO rate:
-    * the counter that separates "the sample did more write work" from
-    * "the same writes drained slower" — the residual ambiguity in the
-    * plain reuse twin's clean 32–47 s spread
-    * (docs/HEAPFIX_VALIDATION.md finding 2: sys-cores pinned at 11–12
-    * while wall varies 1.5×). DIAGNOSTIC ONLY, like minflt — a
-    * write-RATE threshold cannot discriminate, because slow writeback
-    * LOWERS the rate; what a reader wants is bytes ≈ equal across twins
-    * while wall differs (device-speed cause) vs bytes tracking wall
-    * (work-volume cause). -1 where the file is unreadable.
-    */
-  private[graft] def parseSelfIo(content: String): (Long, Long) = {
-    def grab(k: String): Long = {
-      val m = java.util.regex.Pattern
-        .compile(s"(?m)^$k:\\s*(\\d+)").matcher(content)
-      if (m.find()) m.group(1).toLong else -1L
-    }
-    (grab("read_bytes"), grab("write_bytes"))
-  }
-
-  /** Cumulative `some total=` stall microseconds from a PSI file
-    * (`/proc/pressure/{io,memory}`): the kernel's own accounting of time
-    * ANY task on the host spent stalled on that resource. The delta of
-    * two reads over a sample's wall window, divided by the window, is
-    * the direct "this sample ran under io/memory pressure" fraction —
-    * the non-CPU contention arm the round-12 detector lacked (its
-    * external-CPU arm read 0.295 cores during the driver-channel 143 s
-    * sf100 MinHash sample and called it clean; CPU accounting is blind
-    * to page-cache eviction, writeback and reclaim stalls by design).
-    * -1 where PSI is unavailable (CONFIG_PSI=n, pre-4.20 kernel) —
-    * never trips the suspect arm, same contract as loadAvg's -1.
-    */
-  private[graft] def psiSomeTotalMicros(path: String): Long =
-    try {
-      val src = scala.io.Source.fromFile(path)
-      val line = try src.getLines().find(_.startsWith("some")).getOrElse("")
-      finally src.close()
-      val m = java.util.regex.Pattern.compile("total=(\\d+)").matcher(line)
-      if (m.find()) m.group(1).toLong else -1L
-    } catch { case _: Throwable => -1L }
-
   /** Cumulative stop-the-world GC milliseconds of THIS JVM (all
     * collectors). Bracketing a sample gives its gc fraction — the
     * self-inflicted counterpart to the external arms: a JVM aged by
@@ -257,45 +195,27 @@ object Bench {
 
   /** Everything bracketed around one timed sample, read in one place so
     * both ends see the same instant ordering. /proc/self/stat is read
-    * ONCE and all four of its counters (utime, stime, minflt, majflt)
-    * parsed from the same line — two reads could straddle a burst and
-    * disagree about which side of the bracket it landed on.
+    * ONCE and both of its counters (utime, stime) parsed from the same
+    * line — two reads could straddle a burst and disagree about which
+    * side of the bracket it landed on.
     */
   private final case class EnvSnap(hostBusy: Long, selfUser: Long,
-                                   selfSys: Long, gcMs: Long,
-                                   minflt: Long, majflt: Long,
-                                   psiIo: Long, psiMem: Long,
-                                   ioRead: Long, ioWrite: Long)
+                                   selfSys: Long, gcMs: Long)
 
   private def snapEnv(): EnvSnap = {
-    val (u, s, minf, majf) = try {
+    val (u, s) = try {
       val src = scala.io.Source.fromFile("/proc/self/stat")
       val line = try src.getLines().next() finally src.close()
-      val (uu, ss) = parseSelfUtimeStime(line)
-      (uu, ss, parseSelfMinflt(line), parseSelfMajflt(line))
-    } catch { case _: Throwable => (-1L, -1L, -1L, -1L) }
-    val (ioR, ioW) = try {
-      val src = scala.io.Source.fromFile("/proc/self/io")
-      val content = try src.mkString finally src.close()
-      parseSelfIo(content)
+      parseSelfUtimeStime(line)
     } catch { case _: Throwable => (-1L, -1L) }
-    EnvSnap(hostBusyJiffies, u, s, gcMillis, minf, majf,
-      psiSomeTotalMicros("/proc/pressure/io"),
-      psiSomeTotalMicros("/proc/pressure/memory"),
-      ioR, ioW)
+    EnvSnap(hostBusyJiffies, u, s, gcMillis)
   }
 
   /** Per-sample diagnostics derived from the two [[EnvSnap]] brackets.
     * Unavailable counters surface as -1 and never trip [[envCause]].
     */
   private[graft] final case class SampleDiag(extCores: Double, gcFrac: Double,
-                                             sysCores: Double,
-                                             minfltRate: Double,
-                                             majfltRate: Double,
-                                             psiIoFrac: Double,
-                                             psiMemFrac: Double,
-                                             ioReadMb: Double = -1.0,
-                                             ioWriteMb: Double = -1.0)
+                                             sysCores: Double)
 
   private def diagOf(a: EnvSnap, b: EnvSnap, secs: Double): SampleDiag = {
     def frac(x0: Long, x1: Long, unitPerSec: Double): Double =
@@ -312,19 +232,7 @@ object Bench {
     SampleDiag(
       extCores = extCores,
       gcFrac = frac(a.gcMs, b.gcMs, 1000.0),
-      sysCores = frac(a.selfSys, b.selfSys, 100.0), // jiffies → cores
-      minfltRate = if (a.minflt < 0 || b.minflt < 0 || secs <= 0) -1.0
-                   else math.max(0.0, (b.minflt - a.minflt) / secs),
-      majfltRate = if (a.majflt < 0 || b.majflt < 0 || secs <= 0) -1.0
-                   else math.max(0.0, (b.majflt - a.majflt) / secs),
-      psiIoFrac = frac(a.psiIo, b.psiIo, 1e6),
-      psiMemFrac = frac(a.psiMem, b.psiMem, 1e6),
-      // TOTAL MB over the sample (not a rate): the diagnostic question
-      // is "did the twins move the same bytes" — see [[parseSelfIo]]
-      ioReadMb = if (a.ioRead < 0 || b.ioRead < 0) -1.0
-                 else math.max(0.0, (b.ioRead - a.ioRead) / 1048576.0),
-      ioWriteMb = if (a.ioWrite < 0 || b.ioWrite < 0) -1.0
-                  else math.max(0.0, (b.ioWrite - a.ioWrite) / 1048576.0))
+      sysCores = frac(a.selfSys, b.selfSys, 100.0)) // jiffies → cores
   }
 
   /** The measured cause when a sample's environment ran abnormal, or
@@ -332,27 +240,16 @@ object Bench {
     *
     *   - `ext`: other processes burned > max(1, cores/16) CPU cores
     *     during the sample ([[highExternal]] — the round-12 arm).
-    *   - `psi_io` / `psi_mem`: tasks on the host spent >25% of the
-    *     sample's wall window stalled on IO / memory reclaim (kernel
-    *     PSI accounting — catches page-cache eviction, writeback and
-    *     reclaim pressure that burns no CPU and so slipped past the
-    *     r12 detector: BENCH_r12's 143 s sf100 MinHash sample read
-    *     0.295 external cores and was labeled clean).
-    *   - `sys`: THIS process burned kernel CPU at > [[sysCoresMax]]
+    *   - `sys`: THIS process burned kernel CPU at > [[SysCoresMax]]
     *     cores over the sample's window (stime/wall, the round-14 arm).
     *     This is the arm every earlier round lacked structurally: ext
-    *     SUBTRACTS self-burn so own-kernel time keeps it at 0, majflt
-    *     counts disk-backed faults only, PSI memory reads 0 without
-    *     reclaim, and GC is normal — yet this host's one documented
-    *     pathology (docs/BENCH_HEAP.md: -Xmx100g ⇒ 8× slower, sys
-    *     1832 s vs 17 s) is exactly kernel first-touch page-zeroing
-    *     INSIDE the bench process. Threshold calibrated on this host
-    *     (and the reason there is no minflt arm): see [[sysCoresMax]].
-    *     When both ext and sys fire, the LARGER signal names the cause.
-    *   - `majflt`: this process took major page faults at >50/s (and
-    *     >100 total — a handful on a short sample is startup noise).
-    *     With no swap configured this means page-cache misses on
-    *     file-backed mappings — evicted executable/jar pages.
+    *     SUBTRACTS self-burn so own-kernel time keeps it at 0, and GC is
+    *     normal — yet this host's one documented pathology
+    *     (docs/BENCH_HEAP.md: -Xmx100g ⇒ 8× slower, sys 1832 s vs 17 s)
+    *     is exactly kernel first-touch page-zeroing INSIDE the bench
+    *     process. Threshold calibrated on this host (and the reason
+    *     there is no minflt arm): see [[SysCoresMax]]. When both ext
+    *     and sys fire, the LARGER signal names the cause.
     *   - `gc`: >50% of the sample's wall window was stop-the-world GC.
     *     Not host contention but still a sample that does NOT measure
     *     the query's plan: on fixed code+data+heap, a gc-dominated
@@ -373,14 +270,11 @@ object Bench {
     // cores while side-effect kernel threads nudged ext to 2.1 — an
     // "ext=2.1" label on a sample whose real cause is 19 cores of
     // own-process kernel time misattributes the round's central anomaly
-    val sysHit = d.sysCores > sysCoresMax
+    val sysHit = d.sysCores > SysCoresMax
     val extHit = highExternal(d.extCores)
     if (extHit && (!sysHit || d.extCores >= d.sysCores))
       Some(r("ext=%.1f", d.extCores))
     else if (sysHit) Some(r("sys=%.1f", d.sysCores))
-    else if (d.psiIoFrac > 0.25) Some(r("psi_io=%.2f", d.psiIoFrac))
-    else if (d.psiMemFrac > 0.25) Some(r("psi_mem=%.2f", d.psiMemFrac))
-    else if (d.majfltRate > 50.0) Some(r("majflt=%.0f/s", d.majfltRate))
     else if (d.gcFrac > 0.5) Some(r("gc=%.2f", d.gcFrac))
     else None
   }
@@ -397,15 +291,13 @@ object Bench {
     * bench-channel samples measured 16.2–20.1 sys cores (bloom twin
     * 4.6×, plain 2.6×, sf100 MinHash 2.4–8× slow). 13.0 splits the
     * bands: ≥15% above the worst clean value, ≥24% under the mildest
-    * pathological one. Env-overridable for other host classes, same
-    * contract as [[calibBaseline]].
+    * pathological one.
     *
     * TWO MEASURED NEGATIVES, recorded so nobody re-adds them:
     * (1) minflt RATE does not discriminate — the clean 8g control
     * faulted at up to 110k/s (normal allocation + mmap'd shuffle files)
     * while the 100g pathology ran 42k–166k/s, because slow first-touch
-    * faults REDUCE the fault rate (each fault costs more wall); it
-    * rides in every artifact as a diagnostic array only. (2) sys
+    * faults REDUCE the fault rate (each fault costs more wall). (2) sys
     * FRACTION (stime/(utime+stime)) does not discriminate either —
     * clean plain screen 0.49 vs pathological 0.64, clean bloom 0.27 vs
     * 0.33 (docs/twinprofile_*.json) — overlapping bands, because a
@@ -415,8 +307,7 @@ object Bench {
     * which no per-stage fraction sees. The threshold-free arm that
     * actually pins the channel difference is [[heapMismatchCause]].
     */
-  private def sysCoresMax: Double =
-    sys.env.getOrElse("SPARK_GRAFT_SYS_CORES_MAX", "13.0").toDouble
+  private val SysCoresMax = 13.0
 
   /** The committed bench protocol runs -Xmx8g (docs/BENCH_HEAP.md: this
     * host zeroes fresh pages pathologically slowly, so heap size selects
@@ -520,10 +411,10 @@ object Bench {
     * 9.6→17.3 mid-pass and silently ~2×-inflated its tail queries while
     * `contended` pointed at the other two passes. So calibration now
     * BRACKETS every sample: each pass runs the job at start, every
-    * [[calibEvery]] queries, and at pass end; a sample is `suspect` when
+    * [[CalibEvery]] queries, and at pass end; a sample is `suspect` when
     * EITHER of its two surrounding calibration points ran hot. Hot =
     * exceeding 1.5× the smaller of (best point in this run, the absolute
-    * idle baseline [[calibBaseline]]) — the absolute arm catches
+    * idle baseline [[CalibBaseline]]) — the absolute arm catches
     * UNIFORMLY contended runs, where every pass is slow and the best-pass
     * relative rule alone would report a falsely clean `contended: []`.
     * The lambda is JIT-warmed by an untimed 1M-step run inside [[warmup]]
@@ -532,7 +423,7 @@ object Bench {
   private def calibrate(spark: SparkSession, steps: Long = 100000000L): Double = {
     // one task per session core (NOT a fixed 32): a single full wave of
     // constant-work tasks, so the idle-host duration — and therefore
-    // [[calibBaseline]] — is the single-task time on ANY core count; a
+    // [[CalibBaseline]] — is the single-task time on ANY core count; a
     // fixed task count would multi-wave on smaller sessions and read as
     // phantom contention against the absolute baseline
     val slots = spark.sparkContext.defaultParallelism
@@ -559,80 +450,25 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** Memory-STREAM calibration — the bandwidth twin of [[calibrate]]:
-    * one wave of tasks (one per core), each writing then reducing a
-    * 64 MB long array; returns aggregate touched GB/s
-    * (slots × 128 MB ÷ wall). [[calibrate]]'s xorshift loop is
-    * deliberately register-resident, so it pins parallel SCALAR
-    * capacity and is structurally blind to the memory subsystem — and
-    * round 15 measured exactly that blind spot: after a VM restart the
-    * scale sections ran 1.5–1.9× over their committed bands with every
-    * arm quiet and the scalar calibration DEAD IN BAND
-    * (docs/HOST_DRIFT.md) — same cores, slower memory. This probe makes
-    * host-class drift a recorded number (`membw` in the digest,
-    * `<label>_membw_gbps` per scale section) instead of an unexplained
-    * divergence: compare it across committed artifacts before reading a
-    * scale regression as a code change. A small untimed run warms the
-    * lambda so the first measured value is not C2 compilation.
-    */
-  private[graft] def calibrateMemGbps(spark: SparkSession,
-                                      bytesPerTask: Long = 64L << 20): Double = {
-    val slots = spark.sparkContext.defaultParallelism
-    // G1 interaction (round 16, ADVICE): at the protocol's 32 m regions a
-    // full 64 MiB long[] PLUS its object header is a humongous allocation
-    // spanning THREE contiguous regions (2 full + a sliver for the
-    // header) — ~3 GB of contiguous-region demand per 32-task wave on a
-    // heap the suite has already churned, i.e. the probe itself allocates
-    // the contiguous-humongous class the region pin was introduced to
-    // defuse. Shaving one 4 KiB page off the request keeps array + header
-    // within an exact 2-region multiple: a third fewer regions per wave,
-    // no header sliver fragmenting the map, and the measured GB/s is
-    // computed from the ACTUAL touched bytes so the 0.006% trim cannot
-    // skew comparisons against pre-trim artifacts.
-    val actualBytes = 8L * ((bytesPerTask - 4096) / 8)
-    def wave(bytes: Long): Long = {
-      val n = (bytes / 8).toInt
-      spark.sparkContext.parallelize(1 to slots, slots).map { seed =>
-        val a = new Array[Long](n)
-        var i = 0
-        while (i < n) { a(i) = i.toLong + seed; i += 1 }
-        var s = 0L
-        var j = 0
-        while (j < n) { s += a(j); j += 1 }
-        s
-      }.reduce(_ + _)
-    }
-    val warm = wave(1L << 20) // untimed: JIT-compile the lambda
-    System.gc()               // the arrays just freed must not bill the probe
-    val t0 = System.nanoTime()
-    val sink = wave(actualBytes)
-    val secs = (System.nanoTime() - t0) / 1e9
-    if ((warm ^ sink) == 42L) System.err.print("")
-    slots.toDouble * actualBytes * 2 / secs / (1L << 30)
-  }
-
   /** Expected idle-host calibration cost (seconds). Committed constant for
     * THIS host class: set to the TOP of the judge-measured clean range
     * (0.25–0.42 s across sessions on the 32-thread host) — not above it;
     * round 9's 0.45 left the absolute hot threshold at 0.675 s, which a
     * uniformly ~2×-contended run on a fast host (clean ≈0.3 s) slid
-    * under. Overridable via SPARK_GRAFT_CALIB_BASELINE for other
-    * hardware. The absolute arm of the hot-calibration rule: without it,
+    * under. The absolute arm of the hot-calibration rule: without it,
     * a run where EVERY pass is uniformly contended (the r07 failure — all
     * passes ~1.7× slow) self-compares clean.
     */
-  private def calibBaseline: Double =
-    sys.env.getOrElse("SPARK_GRAFT_CALIB_BASELINE", "0.42").toDouble
+  private val CalibBaseline = 0.42
 
   /** Queries between mid-pass calibration points. 16 → ~8 extra
     * calibration runs per ~135-query pass, ≈2–3 s of a ~4-minute pass —
     * sample-granular contention evidence for ~1% overhead.
     */
-  private def calibEvery: Int =
-    math.max(1, sys.env.getOrElse("SPARK_GRAFT_CALIB_EVERY", "16").toInt)
+  private val CalibEvery = 16
 
   /** A calibration point ran hot when it exceeds the smaller of the
-    * SPIKE arm — 2× the run's best point, floored at [[calibBaseline]] —
+    * SPIKE arm — 2× the run's best point, floored at [[CalibBaseline]] —
     * and the UNIFORM arm, 1.5× the absolute idle baseline (a run where
     * every point is slow self-compares clean on the spike arm alone).
     * The spike arm is 2×, not 1.5×: the constant-work job's own clean
@@ -648,7 +484,7 @@ object Bench {
     * run's floor was.
     */
   private def isHot(c: Double, runBest: Double): Boolean =
-    c > math.min(math.max(2.0 * runBest, calibBaseline), 1.5 * calibBaseline)
+    c > math.min(math.max(2.0 * runBest, CalibBaseline), 1.5 * CalibBaseline)
 
   // (Round-12 note: the round-11 loadavg-before suspect arm that lived
   // here is gone, replaced by the measured external-CPU arm
@@ -804,173 +640,11 @@ object Bench {
       "q_dedup_minhash_lsh_auto", "q_dedup_winnow_pairs",
       "q_curate_e2e_scale"))
 
-  /** Committed-artifact reference values for the scale digest picks
-    * (seconds). Each ref is the MEDIAN of that sample across the
-    * committed zero-suspect idle artifacts (r13b, r14, r14b —
-    * docs/bench_full_*.json), not the latest single value: scale
-    * samples are single-shot and the heaviest ones swing ±30% between
-    * clean idle runs (sf100 curate-scale measured 41.6 / 54.0 / 66.2 s
-    * across three clean artifacts — anchoring the ref at the 41.6
-    * minimum made the divergence check flag a CLEAN idle run, which is
-    * exactly the credibility the check cannot afford to spend).
-    * BenchDigestSpec recomputes every ref from the committed artifact
-    * family (2% rounding tolerance) so the table cannot silently go
-    * stale or drift from its evidence. Round-14 verdict item 6: the
-    * r12/r13 driver channels
-    * measured the heavy scale samples 3–5× slower than every committed
-    * artifact and the divergence was only visible by cross-reading four
-    * files — the digest now carries the reference values and a
-    * `divergent` list so a >1.5× channel mismatch is evidence IN
-    * BENCH_r{N}.json itself. Host-class constants like
-    * [[calibBaseline]]: refresh the medians (and the artifact name in
-    * the spec) when newer idle artifacts land.
-    */
-  val ScaleRefs: Map[String, Map[String, Double]] = Map(
-    // RE-PINNED round 18, SECOND revision: per-query UPPER-MIDDLE
-    // medians across the round's FOUR committed full-protocol artifacts
-    // (docs/bench_full_r18{a,b,c,d}.json — 5/5 passes, zero errors,
-    // clean medians each). Two deliberate departures from the first
-    // r18 pin (which used the lower-middle across a/b/c only), both
-    // evidence-driven:
-    //   1. r18d is folded in. Its sf1 section ran on a slow host
-    //      window (per-sample sys-cores 4–13 with ext≈0, gc≈0,
-    //      psi_io≈0 — kernel time inside the bench's own JVMs, the
-    //      documented 1.5–1.9× between-boot envelope of this VM class),
-    //      so a 4-artifact family now brackets BOTH swing directions.
-    //   2. The ref convention is the UPPER-middle of the even family,
-    //      the opposite side from Bench.median's lower-middle. Sample
-    //      medians keep the lower middle because their contaminant
-    //      (GC, contention) only ever ADDS time; refs got contaminated
-    //      the other way this round: r18a/b measured sf1 reuse-plain
-    //      at 27–30 s on a fast window, the first pin encoded it, and
-    //      the next honest run flagged `divergent` at 51.5 s. A
-    //      same-boot code A/B (docs/bench_r18_sf1_ab_{prepin,head}
-    //      .json: 0e45a25 classes vs HEAD, 3 reps each, idle) refuted
-    //      the code explanation — both eras read 49–58 s, matching the
-    //      r17 family's 46.1/49.2/49.6 — so the 27–30 readings were a
-    //      window extreme, exactly what a slow-side middle resists.
-    //      (The first pin's claim that reuse-plain moved −39% via the
-    //      hash-once checkpoint was wrong and is withdrawn in
-    //      OPTIMIZATION_r18.md: that gate is digest-based exact dedup
-    //      and never touches the shingle/CC kernels.)
-    // The r18 sf100 partition A/B singles remain NOT folded (both on
-    // degraded-membw windows; see OPTIMIZATION_r18.md).
-    "sf1" -> Map(
-      "q_dedup_incremental_reuse_bloom" -> 18.9,
-      "q_dedup_incremental_reuse_plain" -> 47.4,
-      "q_dedup_minhash_lsh_auto" -> 3.4,
-      "q_curate_e2e_scale" -> 16.5,
-      "q_bpe_train" -> 1.8,
-      // round-18 pick (VERDICT r17 item 5): first committed refs
-      "q_text_lr_train" -> 1.9),
-    "sf30" -> Map(
-      "q_dedup_minhash_lsh_auto" -> 11.9,
-      "q_dedup_semdedup" -> 5.1,
-      "q_dedup_winnow_pairs" -> 6.3,
-      "q_curate_e2e_scale" -> 24.1),
-    "sf100" -> Map(
-      "q_dedup_minhash_lsh_auto" -> 29.6,
-      "q_dedup_winnow_pairs" -> 29.3,
-      "q_curate_e2e_scale" -> 62.4))
-
-  /** Divergence rule for the digest's `divergent` list: a measured scale
-    * sample disagrees with its committed reference when the ratio
-    * exceeds 1.5× in either direction — the within-1.5× band is the
-    * round-12 done-criterion for channel agreement. Package-private for
-    * the spec.
-    */
-  private[graft] def isDivergent(measured: Double, ref: Double): Boolean =
-    ref > 0 && measured > 0 &&
-      (measured / ref > 1.5 || ref / measured > 1.5)
-
-  /** Section-level memory-bandwidth fingerprints of the SAME artifact
-    * family [[ScaleRefs]] is pinned to (r18a/b/c/d — the optimization
-    * round's four full-protocol runs: zero errors, clean medians;
-    * BenchDigestSpec recomputes both median families from the committed
-    * artifacts). SCALING.md
-    * rule 10: scale reference values are only comparable within a membw
-    * family, so each ref carries the membw it was measured UNDER; a run
-    * whose section probe reads far below its ref's fingerprint is on
-    * measurably slower memory and its tolerance widens accordingly
-    * ([[divergenceClass]]). Refreshed together with ScaleRefs when a
-    * newer idle artifact lands (the staleness pin cross-checks both).
-    * Caveat this round made measurable: the probe swings within one
-    * boot too (sf1 read 34.3/54.4/33.8 across r17a/b/c), which is
-    * exactly why the per-sample io-pressure arm ([[ioFactor]]) now
-    * carries the witness load the boot fingerprint cannot.
-    *
-    * Each entry pins the per-section MEDIAN probe across the round's
-    * four committed artifacts (r18a/b/c/d — upper-middle of the even
-    * family, the same slow-side convention [[ScaleRefs]] now uses for
-    * the times), NOT a single run's reading (round 18, ADVICE): a
-    * single artifact's probe can pin a swing extreme (r17b's sf1 read
-    * 54.4, the max of a 34–54 intra-boot swing; r18b's sf30 read 3.3,
-    * a degraded window), and pinning an extreme habitually widens or
-    * starves the slow-divergence threshold — a genuine ~2× regression
-    * could self-classify as host drift. The median makes the factor
-    * ≈ 1 on a typical host and lets the widening fire only on
-    * measurably slower memory. BenchDigestSpec recomputes these
-    * medians from the committed artifacts.
-    */
-  private[graft] val ScaleRefMembw: Map[String, Double] =
-    Map("sf1" -> 40.9, "sf30" -> 48.8, "sf100" -> 43.5)
-
-  /** Tolerance multiplier from a membw ratio: 1 when the ratio is
-    * missing/clean, capped at 2 — the measured between-boot envelope of
-    * this VM class is 1.5–1.9× (docs/HOST_DRIFT.md §2), and an uncapped
-    * factor would let an arbitrarily slow host excuse anything.
-    */
-  private[graft] def membwFactor(ratio: Double): Double =
-    if (ratio.isNaN || ratio.isInfinite || ratio <= 0) 1.0
-    else math.min(2.0, math.max(1.0, ratio))
-
-  /** Tolerance multiplier from a sample's PSI-io stall fraction — the
-    * io-pressure arm the membw probe cannot provide (round 17, verdict
-    * item 2): membw fingerprints the BOOT's memory subsystem, uniform
-    * across a section, while writeback pressure is per-WINDOW — r16's
-    * curate sf1/sf100 spread was attributed to the boot's writeback
-    * class in prose (HOST_DRIFT §4) yet sprayed `divergent` because the
-    * classifier only knew membw. PSI `some` io = f means "for f of the
-    * sample's wall window, at least one runnable task was stalled on
-    * io"; full serialization would inflate wall time by at most
-    * 1/(1−f), so that is the factor — capped at 2 like [[membwFactor]]
-    * (an arbitrarily stalled host must not excuse anything), and inert
-    * below a 10% stall floor (every healthy sample shows a few percent;
-    * the arm must witness real pressure, not rounding noise). Only ever
-    * widens the SLOW arm: io stalls cannot make a sample run fast.
-    */
-  private[graft] def ioFactor(psiIoFrac: Double): Double =
-    if (psiIoFrac.isNaN || psiIoFrac.isInfinite || psiIoFrac < 0.10) 1.0
-    else math.min(2.0, 1.0 / (1.0 - math.min(psiIoFrac, 0.5)))
-
-  /** Membw-aware divergence classification (round 16, verdict item 5):
-    * the base 1.5× rule, but a sample that exceeds it while the
-    * section's memory-bandwidth probe names a proportionate host drift
-    * classifies as `host_drift`, not `divergent` — the run-#3 pattern
-    * (docs/HOST_DRIFT.md §2: every heavy sample inflated 1.5–1.9×, all
-    * arms quiet, scalar calibration in band, SLOWER MEMORY the only
-    * witness) self-classifies instead of spraying the divergent list.
-    * `slowFactor` widens the too-slow arm (ref-era membw ÷ measured
-    * membw, clamped to [1,2]); `fastFactor` widens the too-fast arm
-    * symmetrically. A drift the probe does NOT explain stays
-    * `divergent`: r15e's curate@sf100 76.3 vs ref 49.9 ran at HIGHER
-    * membw than the ref's fingerprint — slowFactor 1 — and keeps its
-    * honest divergent entry (the probe catches uniform drift, never
-    * per-query writeback variance; HOST_DRIFT §3).
-    */
-  private[graft] def divergenceClass(measured: Double, ref: Double,
-                                     slowFactor: Double,
-                                     fastFactor: Double): Option[String] =
-    if (!(measured > 0 && ref > 0)) None
-    else if (measured / ref > 1.5 * slowFactor ||
-      ref / measured > 1.5 * fastFactor) Some("divergent")
-    else if (measured / ref > 1.5 || ref / measured > 1.5) Some("host_drift")
-    else None
-
   /** Structured residue of a scale section, kept alongside its JSON
     * fragment so [[digestLine]] can summarize without re-parsing strings.
     * `causes` carries (query → measured cause) for every sample whose
-    * FINAL kept run is still suspect after the settle-retry — the
+    * FINAL kept run is still suspect after the settle-retry, then
+    * (in-flight sample → death class) for each child-JVM death — the
     * round-12 verdict's demand that a flagged scale number ride with
     * its evidence in the driver-parsed line, not only in bench_out.json.
     */
@@ -978,9 +652,7 @@ object Bench {
       label: String,
       results: Seq[(String, Option[Double])],
       contended: Boolean,
-      causes: Seq[(String, String)] = Nil,
-      membwGbps: Double = -1,
-      psiIo: Seq[(String, Double)] = Nil)
+      causes: Seq[(String, String)] = Nil)
 
   /** The FINAL printed line — the one the driver actually parses.
     *
@@ -1005,140 +677,46 @@ object Bench {
                  truncated: Boolean, contended: Seq[Int], suspect: Int,
                  noClean: Int, errors: Int, skipped: Int,
                  medians: Map[String, Double], scales: Seq[ScaleSummary],
-                 sfDir: String, membwGbps: Double = -1): String = {
+                 sfDir: String): String = {
     val qs = DigestQueries
       .flatMap(n => medians.get(n).map(v => "\"" + n + "\":" + fmt(v)))
       .mkString("{", ",", "}")
-    // one decimal for reference values: they are ~±10% host-class
-    // constants, and the digest must stay inside the tail window
-    def fmt1(d: Double): String =
-      String.format(java.util.Locale.ROOT, "%.1f", Double.box(d))
-    val divergent = scala.collection.mutable.ArrayBuffer.empty[String]
-    val hostDrift = scala.collection.mutable.ArrayBuffer.empty[String]
     val scaleJson = scales.map { s =>
       val picks = ScaleDigestPicks.getOrElse(s.label, s.results.map(_._1).take(4))
-      val refs = ScaleRefs.getOrElse(s.label, Map.empty)
       val entries = picks.flatMap { n =>
         s.results.collectFirst {
           case (`n`, r) => "\"" + n + "\":" + r.map(fmt).getOrElse("null")
         }
       }
-      // refs ride as an ARRAY position-aligned with the `<label>` object's
-      // keys (null where no reference exists) — repeating the long query
-      // names would push the digest past the driver's tail window
-      // (measured: named refs cost ~430 chars, aligned arrays ~100)
-      val emittedPicks = picks.filter(n => s.results.exists(_._1 == n))
-      // cross-check every measured pick against its committed reference
-      // (round 14): a >1.5× disagreement between this run and the idle
-      // artifacts lands in the digest's `divergent` list, UNCAPPED since
-      // round 15 (the r14 .take(2) hid 7 of 9 divergent samples behind a
-      // count) — each entry carrying measured/ref and, when the sample
-      // was env-flagged, its cause inline. Entries are POSITIONAL, the
-      // `_ref` arrays' convention: `sf1[2]=93.0/34.5:heap=91136mb` means
-      // the 3rd key of the "sf1" object (named divergent entries measured
-      // ~65 chars each — 12 of them cannot share the tail window with
-      // the rest of the digest; positional ones are ~35)
-      val causeByName = s.causes.toMap
-      val divNames = scala.collection.mutable.Set.empty[String]
-      // membw-aware tolerance (round 16): the section ran at s.membwGbps,
-      // the refs were measured at ScaleRefMembw(label) — a proportionate
-      // uniform host drift reclassifies the entry ([[divergenceClass]]);
-      // entry format `sf1[2]=93.0/34.5~1.8` carries the applied factor
-      val refBw = ScaleRefMembw.getOrElse(s.label, -1.0)
-      val slowF = if (s.membwGbps > 0 && refBw > 0)
-        membwFactor(refBw / s.membwGbps) else 1.0
-      val fastF = if (s.membwGbps > 0 && refBw > 0)
-        membwFactor(s.membwGbps / refBw) else 1.0
-      val psiByName = s.psiIo.toMap
-      emittedPicks.zipWithIndex.foreach { case (n, i) =>
-        // per-SAMPLE io-pressure arm beside the per-SECTION membw arm
-        // (round 17): the effective slow tolerance is the LARGER of the
-        // two witnesses, never their product — divergence beyond 3×
-        // (1.5 × the shared 2× cap) always stays divergent
-        val ioF = ioFactor(psiByName.getOrElse(n, -1.0))
-        val slowEff = math.max(slowF, ioF)
-        for (m <- s.results.collectFirst { case (`n`, Some(v)) => v };
-             ref <- refs.get(n);
-             cls <- divergenceClass(m, ref, slowEff, fastF)) cls match {
-          case "divergent" =>
-            divNames += n
-            divergent += s"${s.label}[$i]=${fmt1(m)}/${fmt1(ref)}" +
-              causeByName.get(n).fold("")(":" + _)
-          case _ =>
-            // measured and ref already ride positionally in the section
-            // object and its `_ref` array — the entry only needs the
-            // position and the applied factor (tail-window budget: the
-            // all-host_drift worst case must fit beside the rest). An
-            // `io` prefix marks the samples only the io arm explains —
-            // the reader must see WHICH witness spoke. An entry in
-            // EITHER list subsumes the digest-level cause map (the full
-            // per-sample cause map is in bench_out.json).
-            divNames += n
-            val viaIo = m / ref > 1.5 * math.max(slowF, fastF) && ioF > slowF
-            hostDrift +=
-              (if (viaIo) s"${s.label}[$i]~io${fmt1(ioF)}"
-               else s"${s.label}[$i]~${fmt1(math.max(slowF, fastF))}")
-        }
-      }
-      val refJson =
-        if (refs.isEmpty) ""
-        else s""","${s.label}_ref":""" + emittedPicks
-          .map(n => refs.get(n).map(fmt1).getOrElse("null"))
-          .mkString("[", ",", "]")
-      // measured per-sample causes for still-suspect scale samples ride
-      // in the digest; since round 15 only for samples whose cause is
-      // NOT already inline in a `divergent` entry (capped at 2 — this
-      // map now only adds signal for suspect-but-within-band samples;
-      // the full cause list is in bench_out.json): a flagged scale
-      // number must carry its own evidence in the line the driver
-      // actually parses. jesc for symmetry with scaleSection's
-      // causeJson — envCause output is internally formatted today, but
-      // a future cause containing a quote must not corrupt the digest.
-      val residualCauses = s.causes.filterNot { case (n, _) => divNames(n) }
+      // measured per-sample causes for still-suspect scale samples (and
+      // child deaths) ride in the digest, capped at 2 — the full cause
+      // list is in bench_out.json: a flagged scale number must carry its
+      // own evidence in the digest itself. jesc for symmetry with
+      // scaleSection's causeJson — envCause output is internally
+      // formatted today, but a future cause containing a quote must not
+      // corrupt the digest.
       val causes =
-        if (residualCauses.isEmpty) ""
-        else s""","${s.label}_suspect_causes":""" + residualCauses.take(2)
+        if (s.causes.isEmpty) ""
+        else s""","${s.label}_suspect_causes":""" + s.causes.take(2)
           .map { case (n, c) => "\"" + n + "\":\"" + jesc(c) + "\"" }
           .mkString("{", ",", "}")
-      s""","${s.label}":${entries.mkString("{", ",", "}")}$refJson""" +
+      s""","${s.label}":${entries.mkString("{", ",", "}")}""" +
         s""","${s.label}_contended":${s.contended}$causes"""
     }.mkString
-    // Entries capped at 8 since round 18 — NOT the r14 .take(2) (that
-    // cap hid 7 of 9 divergent samples behind a bare count with no way
-    // to see WHICH): divergent_n still carries the TRUE count, so a
-    // truncation is self-announcing (array.size < divergent_n), the
-    // first 8 positional entries (~40 chars each) identify the samples,
-    // and the full list is always in bench_out.json + the artifact. The
-    // cap exists for the tail-window budget: a pathological all-refs-
-    // divergent run (13+ entries) used to be the single largest line
-    // item in BenchDigestSpec's worst case, crowding out real picks.
-    val divJson =
-      s""","divergent_n":${divergent.length},"divergent":""" +
-        divergent.take(8).map("\"" + _ + "\"").mkString("[", ",", "]") +
-        // over-band-but-membw-explained entries (empty key omitted):
-        // visible evidence, distinct verdict — see [[divergenceClass]]
-        (if (hostDrift.isEmpty) ""
-         else s""","host_drift":""" +
-           hostDrift.map("\"" + _ + "\"").mkString("[", ",", "]")) +
-        // the run's actual heap, in the line the driver parses — the
-        // channel knob the committed artifacts pin outside themselves;
-        // when this process is a heap-neutralizing re-exec
-        // ([[reexecAtExpectedHeap]]), the parent's foreign heap rides
-        // beside it so the channel mismatch stays visible evidence
-        s""","heap_mb":${Runtime.getRuntime.maxMemory / 1048576}""" +
-        sys.env.get("SPARK_GRAFT_PARENT_HEAP_MB")
-          .collect { case s if s.forall(_.isDigit) => s }
-          .fold("")(p => s""","heap_parent_mb":$p""")
+    // the run's actual heap, in the digest itself — the channel
+    // knob the committed artifacts pin outside themselves; when this
+    // process is a heap-neutralizing re-exec ([[reexecAtExpectedHeap]]),
+    // the parent's foreign heap rides beside it so the channel mismatch
+    // stays visible evidence
+    val heapJson = s""","heap_mb":${Runtime.getRuntime.maxMemory / 1048576}""" +
+      sys.env.get("SPARK_GRAFT_PARENT_HEAP_MB")
+        .collect { case s if s.forall(_.isDigit) => s }
+        .fold("")(p => s""","heap_parent_mb":$p""")
     s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,""" +
       s""""reps":$reps,"reps_completed":$repsCompleted,"truncated":$truncated,""" +
       s""""contended":${contended.mkString("[", ",", "]")},"suspect":$suspect,""" +
       s""""no_clean":$noClean,"errors_n":$errors,"skipped_n":$skipped,""" +
-      s""""clean_medians":true,"digest":true$scaleJson$divJson""" +
-      // run-level memory-bandwidth probe (GB/s): the host-class
-      // fingerprint the scalar calibration can't see — a divergent
-      // scale list beside an out-of-family membw is host drift, not a
-      // code regression (per-section values in bench_out.json)
-      (if (membwGbps > 0) s""","membw":${fmt1(membwGbps)}""" else "") +
+      s""""clean_medians":true,"digest":true$scaleJson$heapJson""" +
       s""","detail":"bench_out.json","sf":"$sfDir"}"""
   }
 
@@ -1291,22 +869,15 @@ object Bench {
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
 
   /** Settle window before retrying a suspect scale sample (seconds).
-    * Host contention here arrives as short bursts (1–6 cores for tens of
-    * seconds, every few minutes — measured across rounds); 20 s lets a
-    * burst that bit the first attempt drain before the retry starts.
+    * Every first-pass suspect is retried once after it (round 13; the
+    * r12 run shipped its THIRD consecutive contended sf1 section — one
+    * in-run retry usually lands a clean sample at the cost of one extra
+    * minute-scale query). Host contention here arrives as
+    * short bursts (1–6 cores for tens of seconds, every few minutes —
+    * measured across rounds); 20 s lets a burst that bit the first
+    * attempt drain before the retry starts.
     */
-  private def settleSecs: Double =
-    sys.env.getOrElse("SPARK_GRAFT_SCALE_SETTLE", "20").toDouble
-
-  /** Whether a suspect scale sample is retried once after [[settleSecs]]
-    * (round-13; the r12 driver channel shipped its THIRD consecutive
-    * contended sf1 section — flagged honestly, but round-over-round
-    * comparison then needs the committed idle artifacts; one in-run
-    * retry usually lands a clean sample at the cost of one extra
-    * minute-scale query).
-    */
-  private def scaleRetry: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_SCALE_RETRY", "true").toBoolean
+  private val SettleSecs = 20.0
 
   /** Stream every byte of a scale dir through the page cache, returning
     * (MB read, seconds). Round 15, verdict item 2 — the unexplained
@@ -1360,9 +931,10 @@ object Bench {
     * the round-15 driver JVM died mid-section and an end-of-section
     * emission salvaged nothing) and once more at the end.
     * The section is calibration-BRACKETED per query, every sample carries
-    * the full [[SampleDiag]] environment bracket, and a sample whose
-    * window ran abnormal ([[envCause]] or a hot calibration bracket) is
-    * RETRIED once after a settle window — the retry replaces the sample
+    * the [[SampleDiag]] environment bracket (external CPU, own kernel
+    * CPU, GC fraction), and a sample whose window ran abnormal
+    * ([[envCause]], a heap mismatch, or a hot calibration bracket) is
+    * RETRIED once after [[SettleSecs]] — the retry replaces the sample
     * only when its own window is clean, and the replaced original rides
     * in `<label>_retried` so nothing is silently discarded.
     * `timeLeft()` is consulted between queries: once false, the rest of
@@ -1394,9 +966,6 @@ object Bench {
       // artifact as `<label>_precache_{mb,sec}`
       val (precacheMb, precacheSec) = precacheDir(spark, dir)
       warmup(spark, dir)
-      // bandwidth probe once per section, warm JVM, before any sample —
-      // host-class drift evidence for this section's minute-scale runs
-      val membwGbps = calibrateMemGbps(spark)
       val load = loadAvg
       // calibration BETWEEN EVERY query, not just section brackets: a
       // scale query runs minutes, so a host-contention burst (r10: an
@@ -1447,18 +1016,16 @@ object Bench {
       // Suspect arms here: the PER-QUERY calibration brackets (already
       // sample-granular in this section, unlike the main suite's
       // every-16-queries points) OR any measured [[envCause]] arm —
-      // external CPU, PSI io/memory stall, major faults, GC-dominated
-      // window. A loadavg arm would false-positive here — samples are
-      // minute-scale 32-thread jobs back-to-back, so the 1-minute
-      // loadavg before query N is dominated by query N-1's own
-      // just-finished threads (measured 3.8 → 15.0 self-ramp across an
-      // otherwise-idle section) — but every envCause arm measures the
-      // sample's OWN window, so none has a self-ramp to false-positive
-      // on, and unlike the brackets they SEE pressure living entirely
-      // inside a minute-long sample (the r12 failure: a 143 s sf100
-      // sample with cool edges and 0.295 external cores, labeled clean
-      // while its cause — non-CPU by elimination — stayed invisible).
-      // The load reads still ride in `<label>_sample_load_before`.
+      // external CPU, own-process kernel CPU, GC-dominated window. A
+      // loadavg arm would false-positive here — samples are minute-scale
+      // 32-thread jobs back-to-back, so the 1-minute loadavg before
+      // query N is dominated by query N-1's own just-finished threads
+      // (measured 3.8 → 15.0 self-ramp across an otherwise-idle
+      // section) — but every envCause arm measures the sample's OWN
+      // window, so none has a self-ramp to false-positive on, and unlike
+      // the brackets they SEE CPU pressure living entirely inside a
+      // minute-long sample. The load reads still ride in
+      // `<label>_sample_load_before`.
       def runBest = calibs.min
       def causeOf(r: ScaleRun): Option[String] =
         envCause(r.diag)
@@ -1542,23 +1109,13 @@ object Bench {
             s""""${label}_sample_ext_cores":${jm(r => fmt(r.diag.extCores))},""" +
             s""""${label}_sample_gc_frac":${jm(r => fmt(r.diag.gcFrac))},""" +
             s""""${label}_sample_sys_cores":${jm(r => fmt(r.diag.sysCores))},""" +
-            s""""${label}_sample_minflt_rate":${jm(r => fmt(r.diag.minfltRate))},""" +
-            s""""${label}_sample_majflt_rate":${jm(r => fmt(r.diag.majfltRate))},""" +
-            s""""${label}_sample_psi_io":${jm(r => fmt(r.diag.psiIoFrac))},""" +
-            s""""${label}_sample_psi_mem":${jm(r => fmt(r.diag.psiMemFrac))},""" +
-            s""""${label}_sample_io_read_mb":${jm(r => fmt(r.diag.ioReadMb))},""" +
-            s""""${label}_sample_io_write_mb":${jm(r => fmt(r.diag.ioWriteMb))},""" +
             s""""${label}_jvm":$jvmHealthJson,""" +
-            s""""${label}_membw_gbps":${fmt(membwGbps)},""" +
             s""""${label}_precache_mb":${fmt(precacheMb)},""" +
             s""""${label}_precache_sec":${fmt(precacheSec)}""" +
             manifestJson +
             s""","${label}_dir":"$dir""""
         (frag, ScaleSummary(label, ran.map(r => r.name -> r.res.toOption), hot,
-          causes, membwGbps,
-          // the kept run's PSI-io stall fraction, per query — the
-          // digest's io-pressure divergence arm reads it ([[ioFactor]])
-          ran.map(r => r.name -> r.diag.psiIoFrac)))
+          causes))
       }
       def publishNow(): Unit = { val (f, s) = snapshot(); publish(f, s) }
       picked.foreach { q =>
@@ -1573,9 +1130,8 @@ object Bench {
       // no settle-retry under a heap mismatch: the cause is permanent for
       // the whole process, so a retry can only re-pay the sample's cost
       // to earn the same flag
-      if (scaleRetry && firstSuspects.nonEmpty && heapMismatchCause.isEmpty
-        && timeLeft()) {
-        Thread.sleep((settleSecs * 1000).toLong)
+      if (firstSuspects.nonEmpty && heapMismatchCause.isEmpty && timeLeft()) {
+        Thread.sleep((SettleSecs * 1000).toLong)
         firstSuspects.foreach { name =>
           if (timeLeft()) {
             val q = picked.find(_.name == name).get
@@ -1770,8 +1326,7 @@ object Bench {
   private[graft] def encodeSection(frag: String, s: ScaleSummary): String = {
     val sb = new StringBuilder
     sb.append("FRAG\t").append(frag).append('\n')
-    sb.append("SUM\t").append(s.label).append('\t').append(s.contended)
-      .append('\t').append(s.membwGbps).append('\n')
+    sb.append("SUM\t").append(s.label).append('\t').append(s.contended).append('\n')
     s.results.foreach { case (n, r) =>
       sb.append("RES\t").append(n).append('\t')
         .append(r.fold("NA")(_.toString)).append('\n')
@@ -1779,9 +1334,6 @@ object Bench {
     s.causes.foreach { case (n, c) =>
       sb.append("CAUSE\t").append(n).append('\t')
         .append(c.replace("\n", " ")).append('\n')
-    }
-    s.psiIo.foreach { case (n, v) =>
-      sb.append("PSI\t").append(n).append('\t').append(v).append('\n')
     }
     sb.toString
   }
@@ -1796,7 +1348,7 @@ object Bench {
       val frag = lines.find(_.startsWith("FRAG\t")).map(_.substring(5))
       val sum = lines.find(_.startsWith("SUM\t")).map(_.split("\t", -1))
       (frag, sum) match {
-        case (Some(f), Some(Array(_, label, contended, membw))) =>
+        case (Some(f), Some(Array(_, label, contended))) =>
           val results = lines.filter(_.startsWith("RES\t")).toSeq.map { l =>
             val Array(_, n, v) = l.split("\t", -1)
             n -> (if (v == "NA") None else Some(v.toDouble))
@@ -1805,12 +1357,7 @@ object Bench {
             val parts = l.split("\t", 3)
             parts(1) -> parts(2)
           }
-          val psiIo = lines.filter(_.startsWith("PSI\t")).toSeq.map { l =>
-            val Array(_, n, v) = l.split("\t", -1)
-            n -> v.toDouble
-          }
-          Some((f, ScaleSummary(label, results, contended.toBoolean, causes,
-            membw.toDouble, psiIo)))
+          Some((f, ScaleSummary(label, results, contended.toBoolean, causes)))
         case _ => None
       }
     } catch { case _: Throwable => None }
@@ -2155,7 +1702,7 @@ object Bench {
     // minutes apart, so a sustained host-noise window lands in at most
     // one of them, and no pass inherits another's session state. The
     // constant-work calibration job ([[calibrate]]) BRACKETS every
-    // sample — pass start, every [[calibEvery]] queries, pass end — so a
+    // sample — pass start, every [[CalibEvery]] queries, pass end — so a
     // reader can separate "the code got slower" from "the host was busy"
     // at SAMPLE granularity, not just pass granularity.
     //
@@ -2195,7 +1742,7 @@ object Bench {
       */
     def emit(): Unit = {
       val ps = passes.toSeq ++ partialPass
-      val runBest = (calibBaseline +: ps.flatMap(_.calibs)).min
+      val runBest = (CalibBaseline +: ps.flatMap(_.calibs)).min
       // A pass is CONTENDED when TWO OR MORE of its calibration points
       // ran hot ([[isHot]]) — a sustained window spans multiple bracket
       // points (BENCH_r08's mid-pass climb would flag several), while a
@@ -2216,9 +1763,8 @@ object Bench {
             p.samples.count(s => envCause(s.diag).isDefined) >= 2 => i + 1 }
       // A sample is SUSPECT when either surrounding calibration point ran
       // hot OR any [[envCause]] arm measured an abnormal environment
-      // DURING its wall window — external CPU (the r12 arm), PSI
-      // io/memory stall, major-fault storms, or a GC-dominated window
-      // (the r13 arms: the causes CPU accounting is blind to). Only
+      // DURING its wall window — external CPU (the r12 arm), own-process
+      // kernel CPU (the r14 arm) or a GC-dominated window. Only
       // successful reps are judged, so every per-query array below
       // (samples / ts / load / diag / cause / suspect) is index-aligned.
       val judged: Seq[(String, Judged)] = ps.flatMap { p =>
@@ -2277,12 +1823,6 @@ object Bench {
       val sampleExt = jmap(good)(s => s.map(j => fmt(j.diag.extCores)).mkString("[", ",", "]"))
       val sampleGc = jmap(good)(s => s.map(j => fmt(j.diag.gcFrac)).mkString("[", ",", "]"))
       val sampleSys = jmap(good)(s => s.map(j => fmt(j.diag.sysCores)).mkString("[", ",", "]"))
-      val sampleMinflt = jmap(good)(s => s.map(j => fmt(j.diag.minfltRate)).mkString("[", ",", "]"))
-      val sampleMajflt = jmap(good)(s => s.map(j => fmt(j.diag.majfltRate)).mkString("[", ",", "]"))
-      val samplePsiIo = jmap(good)(s => s.map(j => fmt(j.diag.psiIoFrac)).mkString("[", ",", "]"))
-      val samplePsiMem = jmap(good)(s => s.map(j => fmt(j.diag.psiMemFrac)).mkString("[", ",", "]"))
-      val sampleIoRead = jmap(good)(s => s.map(j => fmt(j.diag.ioReadMb)).mkString("[", ",", "]"))
-      val sampleIoWrite = jmap(good)(s => s.map(j => fmt(j.diag.ioWriteMb)).mkString("[", ",", "]"))
       val sampleCause = jmap(good)(s =>
         s.map(j => "\"" + jesc(j.cause.getOrElse("")) + "\"").mkString("[", ",", "]"))
       val sampleSuspect = jmap(good)(s => s.map(_.suspect).mkString("[", ",", "]"))
@@ -2303,7 +1843,7 @@ object Bench {
       // bench_out.json for re-adjudication.
       val errJson = if (failed.isEmpty) "" else s""","errors":${jarr(failed)}"""
       // calibration: one array of bracket points PER PASS (start, every
-      // calibEvery queries, end).
+      // CalibEvery queries, end).
       val calibJson = ps
         .map(_.calibs.map(fmt).mkString("[", ",", "]")).mkString("[", ",", "]")
       val contJson = contended.mkString("[", ",", "]")
@@ -2325,7 +1865,7 @@ object Bench {
       val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
         s""""queries":$qs,"reps":$reps,"reps_completed":${passes.length},""" +
         s""""truncated":$truncated,"calibration":$calibJson,""" +
-        s""""calib_baseline":${fmt(calibBaseline)},""" +
+        s""""calib_baseline":${fmt(CalibBaseline)},""" +
         s""""contended":$contJson,"suspect":$nSuspect,""" +
         s""""no_clean":${noClean.length},"clean_medians":true""" +
         s"""$errJson$skipJson${scaleJsons.mkString},"sf":"$sfDir"}"""
@@ -2336,17 +1876,11 @@ object Bench {
         s""""sample_ext_cores":$sampleExt,""" +
         s""""sample_gc_frac":$sampleGc,""" +
         s""""sample_sys_cores":$sampleSys,""" +
-        s""""sample_minflt_rate":$sampleMinflt,""" +
-        s""""sample_majflt_rate":$sampleMajflt,""" +
-        s""""sample_psi_io":$samplePsiIo,""" +
-        s""""sample_psi_mem":$samplePsiMem,""" +
-        s""""sample_io_read_mb":$sampleIoRead,""" +
-        s""""sample_io_write_mb":$sampleIoWrite,""" +
         s""""sample_cause":$sampleCause,""" +
         s""""sample_suspect":$sampleSuspect,""" +
         s""""jvm":$jvmHealthJson,""" +
-        s""""calibration":$calibJson,"calib_baseline":${fmt(calibBaseline)},""" +
-        s""""calib_every":$calibEvery,"contended":$contJson,""" +
+        s""""calibration":$calibJson,"calib_baseline":${fmt(CalibBaseline)},""" +
+        s""""calib_every":$CalibEvery,"contended":$contJson,""" +
         s""""suspect":$nSuspect,"clean_medians":true,""" +
         s""""no_clean_samples":${jarr(noClean)},""" +
         s""""pass_load":$loadJson,"reps":$reps,""" +
@@ -2368,13 +1902,10 @@ object Bench {
       // The digest is printed LAST so it is the `{`-line the driver's
       // 2000-char tail grep actually finds — see [[digestLine]].
       val medsMap = good.map(r => r._1 -> median(cleanOf(r._2).map(_.secs))).toMap
-      // run-level bandwidth fingerprint: the scale sections' median probe
-      // (they run first, youngest JVM); -1 (omitted) when none ran
-      val membws = scaleSummaries.map(_.membwGbps).filter(_ > 0).toSeq
       val digest = digestLine(total, reps, passes.length, truncated, contended,
         nSuspect, noClean.length, failed.length,
         skippedWork.length + neverRan.length, medsMap, scaleSummaries.toSeq,
-        sfDir, if (membws.isEmpty) -1 else median(membws))
+        sfDir)
       lastDigest = digest // the shutdown salvage hook's source of truth
       println(digest)
     }
@@ -2395,7 +1926,7 @@ object Bench {
               if (!cut) { cut = true; truncated = true
                 skippedWork += s"pass$p:from:${q.name}" }
             } else {
-              if (qi > 0 && qi % calibEvery == 0) calibs += calibrate(spark)
+              if (qi > 0 && qi % CalibEvery == 0) calibs += calibrate(spark)
               val ts = System.currentTimeMillis() / 1000L
               // loadavg before/after ride along as DIAGNOSTICS only —
               // since round 12 the suspect rule judges on the measured

@@ -29,16 +29,22 @@ class BenchDigestSpec extends AnyFunSuite {
     // 4-digit seconds value is already above anything a default-config
     // run can emit — paranoia beyond the caps would burn tail-window
     // budget on impossible digits. (Raising the cap env knobs 10× buys
-    // one digit per value; the ~90-char margin below absorbs that.)
+    // one digit per value; the margin below absorbs that.)
     val meds = Bench.DigestQueries.map(_ -> 999.999).toMap
+    // any catalog gate can run in a section (SPARK_GRAFT_SF*_QUERIES)
+    val longestNames = SparkEntry.catalog.map(_.name).sortBy(-_.length)
     val scales = Seq("sf1", "sf30", "sf100").map { label =>
       Bench.ScaleSummary(label,
         Bench.ScaleDigestPicks(label).map(_ -> Option(999.999)),
         contended = true,
-        // worst case: EVERY pick still suspect after retry, longest
-        // cause strings — all subsumed into the uncapped `divergent`
-        // entries (the residual-causes path has its own test below)
-        causes = Bench.ScaleDigestPicks(label).map(_ -> "majflt=99999/s"))
+        // worst case: the digest's 2-cause cap filled by child deaths,
+        // each keyed by the longest in-flight marker a death records and
+        // carrying the longest cause a death or a kept arm can produce —
+        // `child_exit_255` (exit statuses are 0–255); `calib_bracket`,
+        // `child_timeout`, `ext=`/`sys=`/`gc=` and, below a 1 TiB heap,
+        // `heap=<N>mb` are all shorter
+        causes = longestNames.take(2)
+          .map(n => s"(between samples; last=$label:$n)" -> "child_exit_255"))
     }
     Bench.digestLine(
       total = 99999.999, reps = 99, repsCompleted = 99, truncated = true,
@@ -47,7 +53,7 @@ class BenchDigestSpec extends AnyFunSuite {
       // the driver pins SPARK_GRAFT_SF_DIR to /root/testdata/sf0.1; a
       // same-length fixture keeps the worst case bound to real inputs
       sfDir = "/root/testdata/sf0.1",
-      membwGbps = 9999.9)
+    )
   }
 
   test("worst-case digest line stays far inside the driver's 2000-char tail window") {
@@ -72,45 +78,15 @@ class BenchDigestSpec extends AnyFunSuite {
     assert(node.get("sf1").size() == Bench.ScaleDigestPicks("sf1").length)
     assert(node.get("sf30").size() == Bench.ScaleDigestPicks("sf30").length)
     assert(node.get("detail").asText() == "bench_out.json")
-    // round 14: the committed-artifact cross-check rides in the digest.
-    // refs are ARRAYS position-aligned with the section object's keys
-    assert(node.get("sf1_ref").isArray)
-    assert(node.get("sf1_ref").size() == node.get("sf1").size())
-    assert(node.get("sf100_ref").size() == node.get("sf100").size())
-    // round 15: the run-level memory-bandwidth probe rides in the digest
-    // (host-class drift evidence beside any divergent list); omitted
-    // entirely when no probe ran
-    assert(node.get("membw").isNumber)
-    val noProbe = mapper.readTree(Bench.digestLine(1.0, 5, 5,
-      truncated = false, contended = Nil, suspect = 0, noClean = 0,
-      errors = 0, skipped = 0, medians = Map.empty, scales = Nil,
-      sfDir = "/tmp/x"))
-    assert(noProbe.get("membw") == null)
-    assert(node.get("divergent").isArray)
-    // worst case: every measured pick is 99999.999 ⇒ every ref'd pick
-    // diverges; since round 15 the list is UNCAPPED (the r14 .take(2)
-    // hid 7 of 9 divergent samples) and each entry carries
-    // measured/ref plus the sample's env cause inline. Entries are
-    // POSITIONAL (`sf1[2]=93.0/34.5:heap=91136mb` = the 3rd key of the
-    // "sf1" object), the `_ref` arrays' convention — named entries
-    // measured ~65 chars each and pushed the worst case past the tail
-    // window.
-    val nRefs = Bench.ScaleRefs.values.map(_.size).sum
-    // capped at 8 since round 18 for the tail-window budget; the TRUE
-    // count still rides divergent_n, so truncation is self-announcing
-    assert(node.get("divergent").size() == math.min(nRefs, 8))
-    assert(node.get("divergent_n").asInt() == nRefs)
-    val entries = (0 until node.get("divergent").size())
-      .map(node.get("divergent").get(_).asText())
-    assert(entries.forall(_.matches("""sf\d+\[\d+\]=[\d.]+/[\d.]+(:.+)?""")),
-      s"malformed divergent entries: $entries")
-    // the worst-case causes hand every pick "majflt=99999/s" — it must
-    // ride inline on the divergent entry, not only in _suspect_causes
-    assert(entries.forall(_.endsWith(":majflt=99999/s")))
-    // a divergent index must resolve against its section object: entry
-    // sf1[i] names the i-th key of the "sf1" object
-    val idx = """sf1\[(\d+)\]""".r.findFirstMatchIn(entries.head).get.group(1).toInt
-    assert(idx < node.get("sf1").size())
+    assert(node.get("sf100").size() == Bench.ScaleDigestPicks("sf100").length)
+    Seq("reps", "reps_completed", "suspect", "no_clean", "errors_n",
+      "skipped_n", "heap_mb").foreach(k =>
+      assert(node.get(k) != null && node.get(k).isInt, s"$k: ${node.get(k)}"))
+    // cross-run drift is not judged in the digest (see the Bench header):
+    // no bandwidth probe, reference arrays or divergence lists
+    Seq("membw", "divergent", "divergent_n",
+      "sf1_ref", "sf30_ref", "sf100_ref").foreach(k =>
+      assert(node.get(k) == null, s"removed key $k is back"))
   }
 
   test("digest with no completed work is still valid minimal JSON") {
@@ -177,90 +153,42 @@ class BenchDigestSpec extends AnyFunSuite {
     }
   }
 
-  test("suspect causes subsumed by divergent entries are dropped; residual ones ride, capped at 2") {
-    // worst case: every caused pick is also divergent, so every cause is
-    // inline in `divergent` and the per-section maps are omitted
+  test("scale suspect causes ride in the digest per section, capped at 2") {
     val worst = mapper.readTree(worstCaseDigest)
-    // picks WITHOUT a committed ref can't divergence-subsume their
-    // cause — it must ride the residual map instead (round 18: the
-    // fresh lr-train pick is unref'd until the next artifact lands)
-    val unrefd = Bench.ScaleDigestPicks("sf1").toSet --
-      Bench.ScaleRefs("sf1").keySet
-    if (unrefd.isEmpty) assert(worst.get("sf1_suspect_causes") == null)
-    else assert(worst.get("sf1_suspect_causes").size() ==
-      math.min(2, unrefd.size))
-    // a suspect-but-WITHIN-BAND sample (measured ≈ ref ⇒ not divergent)
-    // still surfaces its cause through the per-section map
-    val scales = Seq(Bench.ScaleSummary("sf100",
-      Bench.ScaleDigestPicks("sf100").map(n =>
-        n -> Option(Bench.ScaleRefs("sf100")(n))), // measured == ref
-      contended = false,
-      causes = Bench.ScaleDigestPicks("sf100").map(_ -> "ext=3.1")))
+    Seq("sf1", "sf30", "sf100").foreach { label =>
+      val c = worst.get(s"${label}_suspect_causes")
+      assert(c != null && c.size() == 2, s"$label causes: $c")
+      assert(c.elements().next().asText() == "child_exit_255")
+    }
+    val scales = Seq(
+      Bench.ScaleSummary("sf100",
+        Bench.ScaleDigestPicks("sf100").map(_ -> Option(30.0)),
+        contended = false,
+        causes = Bench.ScaleDigestPicks("sf100").map(_ -> "ext=3.1")),
+      Bench.ScaleSummary("sf1", Seq("q_a" -> Some(1.0)), contended = false))
     val node = mapper.readTree(Bench.digestLine(1.0, 5, 5, truncated = false,
       contended = Nil, suspect = 3, noClean = 0, errors = 0, skipped = 0,
       medians = Map.empty, scales = scales, sfDir = "/tmp/x"))
-    assert(node.get("divergent_n").asInt() == 0)
     val causes = node.get("sf100_suspect_causes")
     assert(causes != null && causes.isObject)
     assert(causes.size() == 2) // 3 caused picks, capped at 2
     assert(causes.elements().next().asText() == "ext=3.1")
-  }
-
-  test("PSI parser: 'some … total=' extracted; garbage and absence yield -1") {
-    val f = java.io.File.createTempFile("psi", ".txt")
-    f.deleteOnExit()
-    java.nio.file.Files.write(f.toPath,
-      ("some avg10=0.03 avg60=1.19 avg300=0.58 total=107581482\n" +
-        "full avg10=0.03 avg60=1.19 avg300=0.58 total=99716746\n").getBytes)
-    assert(Bench.psiSomeTotalMicros(f.getAbsolutePath) == 107581482L)
-    java.nio.file.Files.write(f.toPath, "not a psi file\n".getBytes)
-    assert(Bench.psiSomeTotalMicros(f.getAbsolutePath) == -1L)
-    assert(Bench.psiSomeTotalMicros("/nonexistent/psi") == -1L)
-  }
-
-  test("/proc/self/stat majflt parser: field 12, robust to spaces in comm") {
-    // after ')': state ppid pgrp session tty tpgid flags minflt cminflt majflt …
-    val tail = "S 1 2 3 4 5 6 77 88 4242 13 1234 567 0 0 20 0 32 0 99"
-    assert(Bench.parseSelfMajflt(s"1 (java (w) x) $tail") == 4242L)
-    val self = scala.io.Source.fromFile("/proc/self/stat")
-    val actual = try self.getLines().next() finally self.close()
-    assert(Bench.parseSelfMajflt(actual) >= 0L)
-  }
-
-  test("/proc/self/io parser: storage-layer counters only, -1 when a key is absent") {
-    val content = "rchar: 999999\nwchar: 888888\nsyscr: 5\nsyscw: 6\n" +
-      "read_bytes: 1048576\nwrite_bytes: 2097152\ncancelled_write_bytes: 0\n"
-    assert(Bench.parseSelfIo(content) == (1048576L, 2097152L))
-    // rchar must NOT satisfy read_bytes (anchored key match)
-    assert(Bench.parseSelfIo("rchar: 42\nwchar: 43\n") == (-1L, -1L))
-    val self = scala.io.Source.fromFile("/proc/self/io")
-    val actual = try self.mkString finally self.close()
-    val (r, w) = Bench.parseSelfIo(actual)
-    assert(r >= 0L && w >= 0L)
+    // a section without causes omits the key outright
+    assert(node.get("sf1_suspect_causes") == null)
   }
 
   test("envCause arms: each measured pressure names itself; unavailable (-1) stays clean") {
-    def d(ext: Double = 0.1, gc: Double = 0.05, sysC: Double = 0.3,
-          minf: Double = 5000.0, mf: Double = 0.0,
-          io: Double = 0.0, mem: Double = 0.0) =
-      Bench.SampleDiag(ext, gc, sysC, minf, mf, io, mem)
+    def d(ext: Double = 0.1, gc: Double = 0.05, sysC: Double = 0.3) =
+      Bench.SampleDiag(ext, gc, sysC)
     assert(Bench.envCause(d()).isEmpty)
     // unavailable counters must never trip an arm
-    assert(Bench.envCause(d(ext = -1, gc = -1, sysC = -1, minf = -1,
-      mf = -1, io = -1, mem = -1)).isEmpty)
+    assert(Bench.envCause(d(ext = -1, gc = -1, sysC = -1)).isEmpty)
     assert(Bench.envCause(d(ext = 33.0)).exists(_.startsWith("ext=")))
     assert(Bench.envCause(d(gc = 0.82)).exists(_.startsWith("gc=")))
-    assert(Bench.envCause(d(mf = 412.0)).exists(_.startsWith("majflt=")))
-    assert(Bench.envCause(d(io = 0.41)).exists(_.startsWith("psi_io=")))
-    assert(Bench.envCause(d(mem = 0.33)).exists(_.startsWith("psi_mem=")))
     // the round-14 own-process arm: kernel CPU inside this process (the
-    // BENCH_HEAP.md first-touch pathology — invisible to every arm
-    // above; 16.2 = the pathological bloom twin's measured value)
+    // BENCH_HEAP.md first-touch pathology — invisible to the ext arm;
+    // 16.2 = the pathological bloom twin's measured value)
     assert(Bench.envCause(d(sysC = 16.2)).exists(_.startsWith("sys=")))
-    // minflt is a DIAGNOSTIC, not an arm — the calibration runs measured
-    // clean rates up to 110k/s and pathological rates as low as 42k/s
-    // (slow faults reduce the rate); a huge rate alone must stay clean
-    assert(Bench.envCause(d(minf = 450000.0)).isEmpty)
     // when ext and sys both fire, the larger signal names the cause
     // (the injected-pathology sf100 sample: sys=19.3 with ext=2.1)
     assert(Bench.envCause(d(ext = 2.1, sysC = 19.3)).exists(_.startsWith("sys=")))
@@ -269,8 +197,7 @@ class BenchDigestSpec extends AnyFunSuite {
     // clean sample's measured 6.5-11.3 sys cores (sf1 plain reuse twin,
     // whose six history anti-joins + landings burn ~10.6 sys cores
     // LEGITIMATELY per the committed docs/twinprofile_*.json stage data)
-    assert(Bench.envCause(d(gc = 0.4, sysC = 11.3, minf = 40000.0,
-      mf = 40.0, io = 0.2, mem = 0.2)).isEmpty)
+    assert(Bench.envCause(d(gc = 0.4, sysC = 11.3)).isEmpty)
   }
 
   test("heap-mismatch arm: this 512m-spec JVM vs the 8192mb protocol heap") {
@@ -286,73 +213,16 @@ class BenchDigestSpec extends AnyFunSuite {
     } else assert(Bench.heapMismatchCause.isEmpty)
   }
 
-  test("/proc/self/stat round-14 parsers: utime/stime separated, minflt at field 10") {
+  test("/proc/self/stat round-14 parser: utime/stime separated") {
     // after ')': state ppid pgrp session tty tpgid flags minflt cminflt majflt …
     val tail = "S 1 2 3 4 5 6 77 88 4242 13 1234 567 0 0 20 0 32 0 99"
     val line = s"1 (java (w) x) $tail"
     assert(Bench.parseSelfUtimeStime(line) == (1234L, 567L))
-    assert(Bench.parseSelfMinflt(line) == 77L)
     // the live file must parse on this platform (the arms run here)
     val self = scala.io.Source.fromFile("/proc/self/stat")
     val actual = try self.getLines().next() finally self.close()
-    assert(Bench.parseSelfMinflt(actual) >= 0L)
     val (u, s) = Bench.parseSelfUtimeStime(actual)
     assert(u >= 0L && s >= 0L)
-  }
-
-  test("ScaleRefs are the recomputed medians of the committed artifact family") {
-    // ScaleRefs are per-query UPPER-MIDDLE medians across the round's
-    // committed full-protocol artifacts (r18a/b/c/d); this test
-    // RECOMPUTES them from the artifacts (2% rounding tolerance) so the
-    // table can neither go stale nor drift from its evidence, and a
-    // committed artifact nobody folded in fails loudly. The slow-side
-    // (upper) middle is deliberate: sample medians keep the lower
-    // middle because sample noise only ADDS time, but refs got
-    // contaminated the other way this round — r18a/b measured sf1
-    // reuse-plain at 27–30 s on a fast host window, the first pin
-    // encoded it, and the next honest run (51.5 s, corroborated by a
-    // same-boot prepin-vs-HEAD A/B and by the r17 family's 46–50)
-    // flagged divergent. See the ScaleRefs scaladoc for the full
-    // evidence chain. The r18 sf100 partition A/B singles are
-    // deliberately NOT folded in (both on degraded-membw windows).
-    val family = Seq("docs/bench_full_r18a.json",
-      "docs/bench_full_r18b.json", "docs/bench_full_r18c.json",
-      "docs/bench_full_r18d.json")
-      .map(java.nio.file.Paths.get(_)).filter(java.nio.file.Files.isReadable)
-    assume(family.size >= 2, "artifact family too small for a median")
-    val nodes = family.map(p => mapper.readTree(java.nio.file.Files.readAllBytes(p)))
-    Bench.ScaleRefs.foreach { case (label, refs) =>
-      refs.foreach { case (q, ref) =>
-        val vals = nodes.flatMap { n =>
-          val section = n.get(label)
-          assert(section != null && section.isObject, s"artifact lacks $label")
-          Option(section.get(q)).map(_.asDouble())
-        }.sorted
-        assert(vals.nonEmpty, s"no artifact carries $label:$q")
-        val median = vals(vals.size / 2) // upper-middle on even counts
-        assert(math.abs(ref / median - 1.0) < 0.02,
-          s"$label:$q ref $ref vs artifact-family median $median " +
-            s"(values ${vals.mkString(", ")}) - refresh the table")
-      }
-      // the membw fingerprint each section's drift factor widens
-      // against must be the per-section MEDIAN probe across the same
-      // artifacts (round 18, ADVICE — the probe swings intra-boot, sf1
-      // read 34.3/54.4/33.8 across r17a/b/c, so pinning one artifact's
-      // reading can pin a swing maximum and habitually widen the
-      // slow-divergence threshold): recompute the median here so a
-      // refs refresh that forgets the fingerprints, or pins a single
-      // run's probe, fails loudly
-      val probes = nodes.map { n =>
-        val bw = n.get(s"${label}_membw_gbps")
-        assert(bw != null, s"an artifact lacks ${label}_membw_gbps")
-        bw.asDouble()
-      }.sorted
-      val median = probes(probes.size / 2)
-      assert(math.abs(median - Bench.ScaleRefMembw(label)) < 0.15,
-        s"$label ScaleRefMembw ${Bench.ScaleRefMembw(label)} vs artifact-" +
-          s"family median $median (probes ${probes.mkString(", ")}) - " +
-          "refresh refs and fingerprints together")
-    }
   }
 
   test("sf100 per-query partition map resolves against the section's queries") {
@@ -363,21 +233,6 @@ class BenchDigestSpec extends AnyFunSuite {
       s"unknown queries in Sf100PartitionMap: " +
         s"${Bench.Sf100PartitionMap.keySet -- Bench.Sf100Queries.toSet}")
     Bench.Sf100PartitionMap.values.foreach(n => assert(n > 0))
-  }
-
-  test("scale reference values resolve against the digest picks; divergence rule is two-sided") {
-    // every ref key must be a pick its section actually emits, or the
-    // cross-check silently checks nothing
-    Bench.ScaleRefs.foreach { case (label, refs) =>
-      val picks = Bench.ScaleDigestPicks(label).toSet
-      assert(refs.keySet.subsetOf(picks),
-        s"$label refs not in digest picks: ${refs.keySet -- picks}")
-      refs.values.foreach(v => assert(v > 0))
-    }
-    assert(!Bench.isDivergent(24.0, 22.9))       // within band
-    assert(Bench.isDivergent(77.4, 22.9))        // the r13 anomaly
-    assert(Bench.isDivergent(10.0, 22.9))        // suspiciously FAST counts too
-    assert(!Bench.isDivergent(0.0, 22.9))        // degenerate guard
   }
 
   test("salvage line: appends salvage keys to the last digest; minimal fallback pre-emit") {
@@ -408,9 +263,7 @@ class BenchDigestSpec extends AnyFunSuite {
     val sum = Bench.ScaleSummary("sf1",
       Seq("q_a" -> Some(1.234), "q_b" -> None),
       contended = true,
-      causes = Seq("q_a" -> "ext=3.1", "q_b" -> "watchdog cancel after 600.0s"),
-      membwGbps = 23.3,
-      psiIo = Seq("q_a" -> 0.123, "q_b" -> 0.0))
+      causes = Seq("q_a" -> "ext=3.1", "sf1:q_b" -> "oom_child"))
     val decoded = Bench.decodeSection(Bench.encodeSection(frag, sum))
     assert(decoded.contains((frag, sum)))
     // empty results/causes round-trip too (a death before the first sample)
@@ -420,140 +273,6 @@ class BenchDigestSpec extends AnyFunSuite {
     assert(Bench.decodeSection("").isEmpty)
     assert(Bench.decodeSection("FRAG\t,half a line").isEmpty) // no SUM
     assert(Bench.decodeSection("garbage\nlines\n").isEmpty)
-  }
-
-  test("io-pressure arm: writeback-stalled samples self-classify; the r16 unexplained minhash stays divergent") {
-    // REPLAY of the recorded r16 driver-channel sf100 RATIOS (BENCH_r16
-    // / VERDICT r16): minhash at 1.57× its ref with the membw probe AT
-    // the ref fingerprint (both membw factors 1) was the round's single
-    // honest divergent; winnow at 1.22× and curate at 1.42× sat within
-    // the 1.5× band. The measured values are scaled to the CURRENT ref
-    // table so the test pins the classifier's arithmetic, not a ref
-    // vintage. The same 1.57× inside a recorded PSI-io stall window is
-    // the writeback class HOST_DRIFT §4 could only ascribe in prose —
-    // now the classifier has the arm.
-    val refs = Bench.ScaleRefs("sf100")
-    val refBw = Bench.ScaleRefMembw("sf100")
-    val mhRef = refs("q_dedup_minhash_lsh_auto")
-    def digest(psiIo: Seq[(String, Double)], minhashX: Double = 1.57) =
-      mapper.readTree(Bench.digestLine(
-        244.2, 5, 5, truncated = false, contended = Seq(1, 2, 5),
-        suspect = 0, noClean = 0, errors = 0, skipped = 0,
-        medians = Map.empty,
-        scales = Seq(Bench.ScaleSummary("sf100",
-          Seq("q_dedup_minhash_lsh_auto" -> Some(mhRef * minhashX),
-            "q_dedup_winnow_pairs" -> Some(refs("q_dedup_winnow_pairs") * 1.22),
-            "q_curate_e2e_scale" -> Some(refs("q_curate_e2e_scale") * 1.42)),
-          contended = false, membwGbps = refBw, psiIo = psiIo)),
-        sfDir = "/root/testdata/sf0.1"))
-    // quiet io (3% stall — below the 10% floor): the honest divergent
-    // entry survives exactly as committed in BENCH_r16
-    val dry = digest(Seq("q_dedup_minhash_lsh_auto" -> 0.03))
-    assert(dry.get("divergent_n").asInt() == 1)
-    assert(dry.get("divergent").get(0).asText().startsWith("sf100[0]="))
-    assert(dry.get("host_drift") == null)
-    // a 35% PSI-io stall window bounds wall inflation at 1/(1−0.35) ≈
-    // 1.54× — enough to explain 1.57×: host_drift with the io-prefixed
-    // entry naming WHICH witness spoke
-    val wet = digest(Seq("q_dedup_minhash_lsh_auto" -> 0.35))
-    assert(wet.get("divergent_n").asInt() == 0)
-    assert(wet.get("host_drift").get(0).asText() == "sf100[0]~io1.5")
-    // the cap holds: a 90% stall claims at most 2× — a 3.8× sample
-    // stays divergent no matter how stalled the window was
-    val capped = digest(Seq("q_dedup_minhash_lsh_auto" -> 0.9), minhashX = 3.8)
-    assert(capped.get("divergent_n").asInt() == 1)
-    // the arm never widens the FAST side: io stalls cannot explain a
-    // sample that beat its ref by 2×
-    val fast = digest(Seq("q_dedup_minhash_lsh_auto" -> 0.45), minhashX = 0.5)
-    assert(fast.get("divergent_n").asInt() == 1)
-    // factor function contract: floor, cap, invalids
-    assert(Bench.ioFactor(-1.0) == 1.0 && Bench.ioFactor(0.05) == 1.0)
-    assert(Bench.ioFactor(0.25) == 1.0 / 0.75)
-    assert(Bench.ioFactor(0.5) == 2.0 && Bench.ioFactor(0.99) == 2.0)
-    assert(Bench.ioFactor(Double.NaN) == 1.0)
-  }
-
-  test("membw-aware divergence: uniform host drift self-classifies; unexplained drift stays divergent") {
-    // the run-#3 pattern (docs/HOST_DRIFT.md §2): winnow@sf100 measured
-    // 58.2 vs committed band ~33.3 — 1.75× over, every arm quiet. With
-    // the section's membw probe reading HALF the ref fingerprint
-    // (slowFactor 2.0), the entry classifies host_drift, not divergent.
-    val slowHost = Bench.membwFactor(13.8 / 6.9)
-    assert(slowHost == 2.0)
-    assert(Bench.divergenceClass(58.2, 33.3, slowHost, 1.0).contains("host_drift"))
-    // r15e's real curate entry: 76.3 vs ref 49.9 (1.53×) with the probe
-    // at 23.5 vs the ref-era 13.8 — FASTER memory, slowFactor 1 — the
-    // probe does NOT explain it and the honest divergent verdict stands
-    val f = Bench.membwFactor(13.8 / 23.5)
-    assert(f == 1.0)
-    assert(Bench.divergenceClass(76.3, 49.9, f, Bench.membwFactor(23.5 / 13.8))
-      .contains("divergent"))
-    // beyond even the drift-widened band stays divergent (factor caps at
-    // 2: an arbitrarily slow host cannot excuse a 4× regression)
-    assert(Bench.divergenceClass(140.0, 33.3, 2.0, 1.0).contains("divergent"))
-    // within the base band: no entry at all
-    assert(Bench.divergenceClass(40.0, 33.3, 2.0, 1.0).isEmpty)
-    // the too-fast arm widens symmetrically on a faster host
-    assert(Bench.divergenceClass(18.0, 33.3, 1.0, 2.0).contains("host_drift"))
-    assert(Bench.divergenceClass(18.0, 33.3, 1.0, 1.0).contains("divergent"))
-    // degenerate guards
-    assert(Bench.divergenceClass(0.0, 33.3, 1.0, 1.0).isEmpty)
-    assert(Bench.membwFactor(Double.NaN) == 1.0)
-    assert(Bench.membwFactor(-1.0) == 1.0)
-    // every ScaleRefs section carries a membw fingerprint to widen against
-    assert(Bench.ScaleRefs.keySet.subsetOf(Bench.ScaleRefMembw.keySet))
-  }
-
-  test("digest host_drift list: drift-explained entries leave the divergent list, ride with factor") {
-    // sf100 section measured 1.7× over every ref with the membw probe at
-    // half the ref-era fingerprint: all entries must land in host_drift
-    val refs = Bench.ScaleRefs("sf100")
-    val scales = Seq(Bench.ScaleSummary("sf100",
-      Bench.ScaleDigestPicks("sf100").map(n => n -> Some(refs(n) * 1.7)),
-      contended = false, causes = Nil,
-      membwGbps = Bench.ScaleRefMembw("sf100") / 2))
-    val node = mapper.readTree(Bench.digestLine(1.0, 5, 5, truncated = false,
-      contended = Nil, suspect = 0, noClean = 0, errors = 0, skipped = 0,
-      medians = Map.empty, scales = scales, sfDir = "/tmp/x",
-      membwGbps = Bench.ScaleRefMembw("sf100") / 2))
-    assert(node.get("divergent_n").asInt() == 0)
-    val hd = node.get("host_drift")
-    assert(hd != null && hd.isArray && hd.size() == refs.size, s"host_drift: $hd")
-    // entries are positional + factor only: measured rides in the section
-    // object, ref in its `_ref` array (tail-window budget)
-    val entries = (0 until hd.size()).map(hd.get(_).asText())
-    assert(entries.forall(_.matches("""sf100\[\d+\]~2\.0""")),
-      s"malformed host_drift entries: $entries")
-    // all-host_drift worst case: every section's every pick over band but
-    // membw-explained, AND every pick still env-caused — host_drift
-    // entries don't carry causes inline, so the per-section
-    // _suspect_causes maps (capped at 2) ride too; the digest must stay
-    // inside the tail window in this shape as well as the all-divergent
-    // one (the length test above)
-    val meds = Bench.DigestQueries.map(_ -> 999.999).toMap
-    val worstDrift = Seq("sf1", "sf30", "sf100").map { label =>
-      val r = Bench.ScaleRefs(label)
-      Bench.ScaleSummary(label,
-        Bench.ScaleDigestPicks(label).map(n => n -> Some(r.getOrElse(n, 10.0) * 1.9)),
-        contended = true,
-        causes = Bench.ScaleDigestPicks(label).map(_ -> "majflt=99999/s"),
-        membwGbps = Bench.ScaleRefMembw(label) / 2)
-    }
-    val driftLine = Bench.digestLine(99999.999, 99, 99, truncated = true,
-      contended = 1 to 99 by 11, suspect = 999, noClean = 999, errors = 999,
-      skipped = 999, medians = meds, scales = worstDrift,
-      // the driver pins SPARK_GRAFT_SF_DIR to /root/testdata/sf0.1; a
-      // same-length fixture keeps the worst case bound to real inputs
-      sfDir = "/root/testdata/sf0.1",
-      membwGbps = 9999.9)
-    assert(mapper.readTree(driftLine).get("host_drift") != null)
-    assert(driftLine.length < 1900,
-      s"all-host_drift worst case is ${driftLine.length} chars:\n$driftLine")
-    // the empty key is omitted outright
-    val clean = mapper.readTree(Bench.digestLine(1.0, 5, 5, truncated = false,
-      contended = Nil, suspect = 0, noClean = 0, errors = 0, skipped = 0,
-      medians = Map.empty, scales = Nil, sfDir = "/tmp/x"))
-    assert(clean.get("host_drift") == null)
   }
 
   test("/proc/self/stat parser: utime+stime counted from after the LAST ')'") {
